@@ -2,11 +2,21 @@
 
 The reference is sequential so skew is moot (SURVEY.md §4); at 10^12 turns a
 hot conversation would pin one task for hours. AQE's skew-join splitting does
-not apply to a Python map stage, so we salt explicitly: distribute rows by
-``(partition_id, xxhash64(conv_id, turn_idx) % salt_buckets)`` so one hot
-conversation fans out over ``salt_buckets`` tasks. Extraction is per-row
+not apply to a Python map stage, so we salt explicitly: each row carries the
+key ``(partition_id, xxhash64(conv_id, turn_idx) % salt_buckets)``, so one
+hot conversation spans ``salt_buckets`` keys. Extraction is per-row
 stateless, so no unsalt step is needed — downstream reassembly shuffles by
 ``(conv_id, turn_idx)`` anyway.
+
+The rows are distributed by RANGE over that key, not by hash. Each task then
+owns a contiguous run of ``(bucket, salt)`` keys, so the output write —
+partitioned by bucket — opens at most ``n_buckets + num_partitions - 1``
+files per table; a hash exchange scattered each bucket's salts over up to
+``min(salt_buckets, num_partitions)`` tasks, one file each. Skew relief is kept: Spark draws the range bounds from a row
+sample, so a heavy bucket is cut between tasks at its salt values while a
+light bucket stays whole. The price is one sampling job per shuffle, which
+re-reads the filtered scan in the JVM only (the key columns are computed
+there; no row reaches Python).
 
 ``salted_repartition_auto`` adds the measure-first variant: the shuffle is
 the single biggest data movement in the pipeline (every payload byte), so
@@ -27,8 +37,11 @@ from pyspark.sql import functions as F
 def salted_repartition(
     df: DataFrame, num_partitions: int, salt_buckets: int = 8
 ) -> DataFrame:
+    """Range-partition ``df`` over ``(partition_id, salt)`` into
+    ``num_partitions`` tasks, each holding whole buckets or whole salt
+    slices of one (see the module docstring)."""
     salt = F.pmod(F.xxhash64(F.col("conv_id"), F.col("turn_idx")), F.lit(salt_buckets))
-    return df.repartition(num_partitions, F.col("partition_id"), salt)
+    return df.repartitionByRange(num_partitions, F.col("partition_id"), salt)
 
 
 def max_key_share(

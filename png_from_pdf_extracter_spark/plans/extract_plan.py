@@ -16,6 +16,11 @@ Scale notes (100 TB / 1000 executors):
 - The only wide exchanges are the salted repartition (needed for skew) and
   the metrics groupBy over ~n_buckets groups (tiny). Extraction itself is a
   map stage; no join touches the big table except the broadcast anti-join.
+- The salted repartition is a RANGE exchange over (bucket, salt): each task
+  writes whole buckets, so the bucket-partitioned output holds at most
+  n_buckets + num_partitions - 1 files per table (a hash exchange scatters
+  every bucket over most tasks). Its range bounds cost one sampling job, a
+  JVM-only pass over the filtered scan that never touches Python.
 - Column pruning: the UDF input is exactly the 6 transcript columns; the
   post-write passes (errors, metrics) read back pruned columns from parquet
   instead of re-running extraction.
@@ -327,12 +332,13 @@ def run_job(
     )
 
     extracted = extract_turns(spark, transcripts, params, metrics)
-    out = _final_turn_columns(extracted, params)
 
     if params.write_units:
         from ..operators import explode_units
 
-        out = out.persist()
+        # cache the frame that still carries ``units`` so both writes below
+        # read it; extraction (scan -> shuffle -> mapInPandas) runs once
+        extracted = extracted.persist()
         explode_units(
             extracted.select(
                 "conv_id", "turn_idx", "partition_id", "units"
@@ -340,12 +346,13 @@ def run_job(
         ).write.mode("append").parquet(catalog.path("extracted_units"))
 
     (
-        out.write.mode("overwrite")
+        _final_turn_columns(extracted, params)
+        .write.mode("overwrite")
         .partitionBy("partition_id")
         .parquet(catalog.path("extracted_turns"))
     )
     if params.write_units:
-        out.unpersist()
+        extracted.unpersist()
 
     # Post-write passes read back pruned columns (no re-extraction).
     written = catalog.read(spark, "extracted_turns")

@@ -35,6 +35,9 @@ def test_flagship_single_exchange_and_filter_before_shuffle(spark, tmp_path):
     )
     plan = _plan(df)
     assert plan.count("Exchange") == 1, plan
+    # a range exchange over (bucket, salt), so each task writes whole
+    # buckets; a hash exchange would scatter every bucket over most tasks
+    assert "Exchange rangepartitioning(partition_id" in plan, plan
     # whitelist evaluated below (before) the exchange: RLIKE appears after
     # the Exchange line in the tree dump (children print below parents)
     assert plan.index("Exchange") < plan.index("RLIKE")
@@ -47,6 +50,59 @@ def test_flagship_never_mode_no_shuffle(spark, tmp_path):
         JobParams(n_buckets=16, num_partitions=4, salt_mode="never"),
     )
     assert "Exchange" not in _plan(df)
+
+
+def test_run_job_writes_whole_buckets_per_task(spark, tmp_path):
+    """With the range-partitioned salt shuffle a task owns a contiguous run
+    of (bucket, salt) keys, so each bucket-partitioned table of a run holds
+    at most n_buckets + num_partitions - 1 files (a hash shuffle wrote
+    about n_buckets * min(salt_buckets, num_partitions))."""
+    from pathlib import Path
+
+    from png_from_pdf_extracter_spark.plans import run_job
+    from png_from_pdf_extracter_spark.sources.catalog import Catalog
+
+    tdf, _ = gen_pandas(GenConfig(n_convs=300))
+    src = str(tmp_path / "transcripts")
+    spark.createDataFrame(tdf, schema=TRANSCRIPTS_SCHEMA).write.parquet(src)
+    catalog = Catalog(str(tmp_path / "wh"))
+    params = JobParams(n_buckets=16, num_partitions=4)
+    stats = run_job(spark, spark.read.parquet(src), catalog, params)
+    assert stats["rows"] > 0
+    bound = params.n_buckets + params.num_partitions - 1
+    for table in ("extracted_turns", "extract_errors"):
+        n = len(list(Path(catalog.path(table)).rglob("*.parquet")))
+        assert 0 < n <= bound, (table, n, bound)
+
+
+def test_write_units_extracts_once(spark, tmp_path, monkeypatch):
+    """write_units=True writes two tables from one extraction: the units
+    write must read the cached extraction, not re-run scan -> shuffle ->
+    mapInPandas."""
+    from png_from_pdf_extracter_spark import operators
+    from png_from_pdf_extracter_spark.plans import run_job
+    from png_from_pdf_extracter_spark.sources.catalog import Catalog
+
+    plans = []
+    real = operators.explode_units
+
+    def spy(df):
+        out = real(df)
+        plans.append(_plan(out))
+        return out
+
+    monkeypatch.setattr(operators, "explode_units", spy)
+    catalog = Catalog(str(tmp_path / "wh"))
+    params = JobParams(n_buckets=8, num_partitions=4, write_units=True)
+    stats = run_job(spark, _transcripts(spark, tmp_path), catalog, params)
+    assert len(plans) == 1
+    # the cached plan prints below its InMemoryRelation; above it, the
+    # units write itself must hold no extraction
+    plan = plans[0]
+    assert "InMemoryRelation" in plan, plan
+    assert "MapInPandas" not in plan[: plan.index("InMemoryRelation")], plan
+    assert stats["rows"] == catalog.read(spark, "extracted_turns").count()
+    assert catalog.read(spark, "extracted_units").count() > 0
 
 
 def test_join_topn_broadcasts_both_dims(spark):

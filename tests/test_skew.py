@@ -49,6 +49,20 @@ def test_hot_conversation_spreads_over_tasks(spark):
     assert unsalted == 1
 
 
+def test_uniform_input_balanced_over_tasks(spark):
+    """Uniform keys: the sampled range bounds give every task about the same
+    row count (a hash of the 128 (bucket, salt) keys onto 16 tasks left the
+    busiest task ~1.7x the mean)."""
+    tdf, _ = gen_pandas(GenConfig(n_convs=300))
+    df = with_partition_id(
+        spark.createDataFrame(tdf, schema=TRANSCRIPTS_SCHEMA), 16
+    )
+    salted = salted_repartition(df, 16, salt_buckets=8)
+    sizes = salted.groupBy(F.spark_partition_id()).count().toPandas()["count"]
+    assert len(sizes) == 16
+    assert sizes.max() <= 1.25 * sizes.sum() / 16, sizes.tolist()
+
+
 def test_skewed_input_still_correct(spark):
     """Equality gate holds on the skewed table (salting must not disturb
     per-turn results or ordering)."""
